@@ -1964,15 +1964,16 @@ def aitoff_inv_xy(lon0: float = 0.0):
 # pipeline runner's `project`/`rotate` ops) route these through the
 # zero-shuffle :func:`project_layer_inplace`. Values are factories
 # taking the projection's parameter kwargs and returning the
-# ``fxy(lon, lat) -> (x, y)`` pair builder. Every forward AND every
-# inverse that emits a plain coordinate pair is here — the 1D Newton
-# solves iterate at runtime via aggregate(sequence) and the 2D ones
-# via a struct accumulator (:func:`_newton2d_inverse_xy`); only
-# per-row-zone UTM stays out (its zone/hemisphere outputs are
-# metadata beyond (x, y)). Any other projection joins by the same
-# mechanical refactor (share the expression tree between the
-# point-table function and the builder, as webmercator/sinusoidal/
-# rotate do).
+# ``fxy(lon, lat) -> (x, y)`` pair builder. Every forward that emits a
+# plain coordinate pair is here (the 1D Newton solves iterate at
+# runtime via aggregate(sequence)); only per-row-zone UTM stays out
+# (its zone/hemisphere outputs are metadata beyond (x, y)). Among the
+# inverses only from_webmercator and the two 2D-Newton inverses are
+# registered (struct accumulator, :func:`_newton2d_inverse_xy`); the
+# other inverses run as point-table functions through project_layer.
+# Any other projection joins by the same mechanical refactor (share
+# the expression tree between the point-table function and the
+# builder, as webmercator/sinusoidal/rotate do).
 XY_BUILDERS = {
     "to_webmercator": lambda: webmercator_xy,
     "from_webmercator": lambda: webmercator_inv_xy,
@@ -1987,8 +1988,7 @@ XY_BUILDERS = {
     # every remaining FORWARD in the module (all closed-form; the
     # point-table functions delegate to these same builders, so both
     # paths share one expression tree). Not here: utm (per-row
-    # zone/hemisphere outputs are metadata beyond (x, y)) and the
-    # 2D-Newton inverses.
+    # zone/hemisphere outputs are metadata beyond (x, y)).
     "albers": albers_xy,
     "lambert_cc": lambert_cc_xy,
     "lambert_azimuthal": lambert_azimuthal_xy,

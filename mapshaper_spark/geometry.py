@@ -11,7 +11,7 @@ textbook algorithm mapshaper uses [SURVEY.md §2.7, §4.1]:
 - Douglas-Peucker max-distance thresholds;
 - Sutherland-Hodgman polygon clip (convex clip window);
 - scanline polygon rasterization (raster<->vector tiles);
-- planar / haversine point distances.
+- haversine point distances.
 """
 
 from __future__ import annotations
@@ -288,165 +288,6 @@ def _gh_build(ring: np.ndarray, inters_per_edge: dict[int, list]):
     return nodes
 
 
-def gh_intersection(subj: np.ndarray, clip: np.ndarray) -> list[np.ndarray]:
-    """A ∩ B — see :func:`gh_clip`."""
-    return gh_clip(subj, clip, "intersection")
-
-
-def gh_difference(subj: np.ndarray, clip: np.ndarray) -> list[np.ndarray]:
-    """A \\ B — see :func:`gh_clip`. A hole cut into the subject comes
-    back as an extra ring; consumers interpret rings even-odd (the
-    engine's multi-ring model)."""
-    return gh_clip(subj, clip, "difference")
-
-
-def gh_union(subj: np.ndarray, clip: np.ndarray) -> list[np.ndarray]:
-    """A ∪ B — see :func:`gh_clip`."""
-    return gh_clip(subj, clip, "union")
-
-
-def gh_clip(subj: np.ndarray, clip: np.ndarray, op: str) -> list[np.ndarray]:
-    """Greiner–Hormann boolean of two SIMPLE polygons (concave ok;
-    multi-ring inputs and degenerate touches out of scope —
-    general-position inputs; the engine's exact-area paths
-    cross-validate it in pytest).
-
-    Returns a list of (m, 2) rings (possibly several disjoint pieces; a
-    difference/union result containing a hole yields the hole as an
-    additional ring — even-odd interpretation). Classic three phases:
-    (1) pairwise proper edge intersections spliced into both rings,
-    (2) entry/exit flags by alternation from the initial inside/outside
-    status — the op selects the flag polarity (GH's one-bit trick:
-    intersection = both normal, union = both flipped, difference =
-    clip's flags flipped), (3) piece tracing — forward from entries,
-    backward from exits, switching rings at every intersection.
-    """
-    flip_subj, flip_clip = {
-        "intersection": (False, False),
-        "union": (True, True),
-        "difference": (True, False),
-    }[op]
-    subj = np.asarray(subj, dtype=float)
-    clip = np.asarray(clip, dtype=float)
-    subj_edges: dict[int, list] = {}
-    clip_edges: dict[int, list] = {}
-    ia, ja, ts, us, pxs, pys = _seg_intersections_bulk(subj, clip)
-    found = len(ia) > 0
-    for i, j, t, u, px, py in zip(ia, ja, ts, us, pxs, pys):
-        a = _GHNode((float(px), float(py)), inter=True, t=float(t))
-        b = _GHNode((float(px), float(py)), inter=True, t=float(u))
-        a.nbr, b.nbr = b, a
-        subj_edges.setdefault(int(i), []).append((float(t), a))
-        clip_edges.setdefault(int(j), []).append((float(u), b))
-
-    if not found:
-        # containment / disjoint, per op
-        subj_in = bool(pip_ray(subj[:1, 0], subj[:1, 1], clip)[0])
-        clip_in = bool(pip_ray(clip[:1, 0], clip[:1, 1], subj)[0])
-        if op == "intersection":
-            if subj_in:
-                return [subj.copy()]
-            if clip_in:
-                return [clip.copy()]
-            return []
-        if op == "union":
-            if subj_in:
-                return [clip.copy()]
-            if clip_in:
-                return [subj.copy()]
-            return [subj.copy(), clip.copy()]
-        # difference
-        if subj_in:
-            return []
-        if clip_in:
-            # clip becomes a hole ring: reversed orientation, so signed
-            # shoelace sums over the rings give the region area directly
-            return [subj.copy(), clip[::-1].copy()]
-        return [subj.copy()]
-
-    snodes = _gh_build(subj, subj_edges)
-    cnodes = _gh_build(clip, clip_edges)
-
-    # phase 2: alternate entry/exit from the start vertex's status;
-    # the op's polarity bit flips one or both lists (GH boolean trick)
-    for nodes, other, flip in ((snodes, clip, flip_subj), (cnodes, subj, flip_clip)):
-        inside = bool(
-            pip_ray(
-                np.array([nodes[0].xy[0]]), np.array([nodes[0].xy[1]]), other
-            )[0]
-        )
-        status = (not inside) ^ flip
-        for n in nodes:
-            if n.inter:
-                n.entry = status
-                status = not status
-
-    # phase 3: trace — forward from entries, backward from exits,
-    # switch rings at every intersection, stop on return to the start
-    traced: list[np.ndarray] = []
-    inters = [n for n in snodes if n.inter]
-    max_steps = 4 * (len(snodes) + len(cnodes))
-    for start in inters:
-        if start.visited:
-            continue
-        ring = [start.xy]
-        start.visited = True
-        start.nbr.visited = True
-        start_pair = (start, start.nbr)
-        cur = start
-        steps = 0
-        while True:
-            steps += 1
-            if steps > max_steps:
-                raise ValueError(
-                    "gh_intersection: non-terminating trace (degenerate "
-                    "input outside general position?)"
-                )
-            forward = cur.entry
-            while True:
-                cur = cur.nxt if forward else cur.prv
-                if cur.inter:
-                    break
-                ring.append(cur.xy)
-            cur.visited = True
-            cur.nbr.visited = True
-            cur = cur.nbr
-            if cur is start_pair[0] or cur is start_pair[1]:
-                break
-            ring.append(cur.xy)
-        if len(ring) >= 3:
-            traced.append(np.array(ring))
-    # hole-aware orientation, batched (r3): a traced ring whose interior
-    # belongs to the result region is an outer boundary (CCW); one whose
-    # interior is outside the result is a hole the result wraps around
-    # (e.g. a U's notch closed off by a union) — oriented CW so signed
-    # sums and even-odd agree. Membership of ALL pieces against subj and
-    # clip runs in two vectorized pip_ray calls (was 2 per piece).
-    # NEAR-BOUNDARY interior points, not centroids [r3 review fix]: a
-    # donut-forming union traces an outer ring whose centroid lies in
-    # the enclosed hole, and testing membership THERE flips the outer
-    # boundary to CW, corrupting every signed-area consumer. The
-    # near-boundary point is inside the traced ring and inside the
-    # region it bounds (same contract gh_clip_rings already uses).
-    pieces = []
-    if traced:
-        pts = np.array([_near_boundary_interior_point(arr) for arr in traced])
-        in_a = pip_ray(pts[:, 0], pts[:, 1], subj)
-        in_b = pip_ray(pts[:, 0], pts[:, 1], clip)
-        in_result = {
-            "intersection": in_a & in_b,
-            "union": in_a | in_b,
-            "difference": in_a & ~in_b,
-        }[op]
-        for i, arr in enumerate(traced):
-            # translation-stabilized sign [r5 sweep find]: the raw form
-            # cancels to 0.0 on eps-sliver pieces at |coord| ~ 2 (true
-            # area ~1e-16), silently reversing the traced orientation
-            ccw = shoelace_area_local(arr[:, 0], arr[:, 1]) > 0.0
-            pieces.append(arr if bool(in_result[i]) == ccw else arr[::-1])
-    return pieces
-
-
 def gh_clip_rings(
     a_rings: list[np.ndarray], b_rings: list[np.ndarray], op: str
 ) -> list[np.ndarray]:
@@ -454,14 +295,17 @@ def gh_clip_rings(
     (outer rings CCW, holes CW, disjoint parts — the engine's feature
     model). Returns the result's ring set, even-odd interpreted.
 
-    Construction on top of the single-ring kernel's machinery:
+    Classic three phases, generalized to ring sets:
 
-    - intersections are spliced across EVERY (a-ring, b-ring) pair;
-      entry/exit flags alternate from the ring's first-vertex parity
-      against the WHOLE other ring set (`pip_rings`), with the op's
-      polarity bit;
-    - crossed-ring pieces trace exactly as in :func:`gh_clip`, and each
-      traced ring is oriented by a near-boundary interior point tested
+    - proper edge intersections are spliced across EVERY (a-ring,
+      b-ring) pair; entry/exit flags alternate from the ring's
+      first-vertex parity against the WHOLE other ring set
+      (`pip_rings`), with the op's polarity bit (GH's one-bit trick:
+      intersection = both normal, union = both flipped, difference =
+      b's flags flipped);
+    - crossed-ring pieces trace forward from entries and backward from
+      exits, switching rings at every intersection, and each traced
+      ring is oriented by a near-boundary interior point tested
       against the op's membership predicate (near-boundary, not
       centroid: a traced region may contain another ring as a hole);
     - UNCROSSED rings are included whole by the parity rule
@@ -472,7 +316,8 @@ def gh_clip_rings(
       and outer roles: a hole of B inside A becomes an island of A∖B).
 
     General-position inputs (no tangency/collinear overlap) — raises
-    loudly otherwise, like the single-ring kernel."""
+    loudly or mis-traces otherwise, so operators never call it raw:
+    they go through the verified :func:`gh_split_rings_robust`."""
     flip_a, flip_b = {
         "intersection": (False, False),
         "union": (True, True),
@@ -614,7 +459,9 @@ def gh_clip_rings(
             "difference": in_a & ~in_b,
         }[op]
         for i, arr in enumerate(traced):
-            # translation-stabilized sign (see gh_clip's twin comment)
+            # translation-stabilized sign [r5 sweep find]: the raw form
+            # cancels to 0.0 on eps-sliver pieces at |coord| ~ 2 (true
+            # area ~1e-16), silently reversing the traced orientation
             ccw = shoelace_area_local(arr[:, 0], arr[:, 1]) > 0.0
             out.append(arr if bool(in_res[i]) == ccw else arr[::-1])
     return out
@@ -763,10 +610,6 @@ def _near_incidence(
     return _hit(b_pts, a_rings) or _hit(a_pts, b_rings)
 
 
-# historical name — the trigger class widened from exact to near in r4
-_exact_incidence = _near_incidence
-
-
 def _verification_frame(rings: list[np.ndarray]) -> np.ndarray:
     """Translation for the robust wrappers' identity checks: the bbox
     min of the combined ring set. Shoelace sums at offset-heavy
@@ -875,15 +718,20 @@ def _local_anchor(rings: list[np.ndarray]):
     return np.array([np.floor(x_lo), np.floor(y_lo)])
 
 
-def gh_clip_rings_robust(
+def gh_split_rings_robust(
     a_rings: list[np.ndarray],
     b_rings: list[np.ndarray],
-    op: str,
     rel_tol: float = 1e-9,
     max_tries: int = 5,
-) -> list[np.ndarray]:
-    """gh_clip_rings with a degeneracy net for real-world layers
-    [NEXT r3 #2]: the kernel assumes general position — tangency,
+    want_union: bool = False,
+):
+    """(A ∩ B, A ∖ B) — plus A ∪ B when ``want_union`` — in ONE verified
+    pass: :func:`gh_clip_rings` with a degeneracy net for real-world
+    layers, and the ONE entry point every boolean operator folds
+    through [NEXT r3 #2; hypothesis sweep r3: the raw kernel crashes or
+    silently corrupts on coincident layers — duplicate features, shared
+    edge runs — which the general-position fixture oracles never
+    exercise]. The kernel assumes general position — tangency,
     collinear overlap, or vertex-on-edge can either raise or silently
     mis-trace. This wrapper (1) verifies the boolean identity
     |A∩B| + |A∖B| = |A| on every attempt (a mis-trace breaks it), and
@@ -891,24 +739,35 @@ def gh_clip_rings_robust(
     content-hash-directed translation (:func:`_attempt_shift`, ε scaled
     to the data and growing per try) that breaks symbolic coincidences
     while moving results by O(ε·perimeter) — far below rel_tol for real
-    data. Every PERTURBED attempt re-checks exact incidence on the
-    shifted geometry before calling the raw kernel [r3 verdict: a fold
+    data. Every PERTURBED attempt re-checks incidence on the shifted
+    geometry before calling the raw kernel [r3 verdict: a fold
     accumulator carrying a prior attempt's residue met an identically-
     shifted clip and became exactly coincident again — the raw kernel
     mis-traced consistently enough to pass all identity checks].
+    All outputs come from the same attempt. Pass ``want_union`` only
+    when the union is consumed: its extra checks can force retries
+    that change the intersection/difference outputs.
     Raises only if every perturbed attempt still fails."""
     a_rings = [np.asarray(r, dtype=float) for r in a_rings]
     b_rings = [np.asarray(r, dtype=float) for r in b_rings]
+    if not a_rings:
+        empty_u = [r.copy() for r in b_rings]
+        return ([], [], empty_u) if want_union else ([], [])
+    if not b_rings:
+        keep = [r.copy() for r in a_rings]
+        return (
+            ([], keep, [r.copy() for r in a_rings]) if want_union else ([], keep)
+        )
     anchor = _local_anchor(a_rings + b_rings)
     if anchor is not None:
-        moved = gh_clip_rings_robust(
+        moved = gh_split_rings_robust(
             [r - anchor for r in a_rings],
             [r - anchor for r in b_rings],
-            op,
             rel_tol,
             max_tries,
+            want_union,
         )
-        return [g + anchor for g in moved]
+        return tuple([g + anchor for g in part] for part in moved)
     frame = _verification_frame(a_rings + b_rings)
     area_a = _area_sum(a_rings, frame)
     area_b = _area_sum(b_rings, frame)
@@ -925,11 +784,11 @@ def gh_clip_rings_robust(
     # aligned real data does this constantly) can make the no-crossing
     # classification mis-read CONSISTENTLY — two offset boxes sharing
     # collinear edge runs returned union=|A| with every identity AND
-    # measure bound satisfied. Exact incidence is a float-equality
+    # measure bound satisfied. Incidence is a near-float-equality
     # event, so detect it directly and start at the perturbed attempt;
     # clean disjoint/crossing geometry keeps its exact unperturbed
     # result.
-    start = 1 if _exact_incidence(a_rings, b_rings) else 0
+    start = 1 if _near_incidence(a_rings, b_rings) else 0
     # A-SPREAD last-resort tier [r5 sweep find — see _spread_shifts]:
     # after the b-shift attempts exhaust, perturb each SUBJECT ring by
     # its own direction (a coincidence INTERNAL to the subject set —
@@ -946,10 +805,10 @@ def gh_clip_rings_robust(
             area_ref = area_a
             shift = _attempt_shift(k, span, a_rings, b_rings)
             b_try = [r + shift for r in b_rings]
-            if _exact_incidence(a_rings, b_try):
-                # the shift re-manufactured an exact coincidence (e.g.
-                # against a prior fold's residue) — never hand that to
-                # the raw kernel; the next attempt's direction differs
+            if _near_incidence(a_rings, b_try):
+                # the shift re-manufactured a coincidence (e.g. against
+                # a prior fold's residue) — never hand that to the raw
+                # kernel; the next attempt's direction differs
                 last_err = ValueError("perturbed attempt still incident")
                 continue
         else:
@@ -960,7 +819,7 @@ def gh_clip_rings_robust(
             # per-ring translation keeps each signed ring area; the
             # identity must still compare against the SPREAD subject
             area_ref = _area_sum(a_try, frame)
-            if _exact_incidence(a_try, b_try):
+            if _near_incidence(a_try, b_try):
                 last_err = ValueError("spread attempt still incident")
                 continue
         try:
@@ -987,22 +846,20 @@ def gh_clip_rings_robust(
                 raise ValueError("intersection measure out of bounds")
             if not (-tol <= d_got <= area_ref + tol):
                 raise ValueError("difference measure out of bounds")
-            if op == "intersection":
-                return inter
-            if op == "difference":
-                return diff
+            if not want_union:
+                return inter, diff
             union = gh_clip_rings(a_try, b_try, "union")
             u_got = _area_sum(union, frame)
             if abs(u_got - (area_ref + area_b - i_got)) > tol:
                 raise ValueError("union identity violated")
             if u_got < max(area_ref, area_b) - tol:
                 raise ValueError("union measure out of bounds")
-            return union
+            return inter, diff, union
         except ValueError as e:
             last_err = e
             continue
     raise ValueError(
-        f"gh_clip_rings_robust: degenerate input not resolved after "
+        f"gh_split_rings_robust: degenerate input not resolved after "
         f"{max_tries} perturbed attempts"
     ) from last_err
 
@@ -1018,7 +875,7 @@ def union_many(rings: list[np.ndarray]) -> list[np.ndarray]:
     incoming polygon joins it through the multi-ring GH union — so
     donut-forming merges (two C-shapes closing a ring) produce the hole
     ring instead of raising. Every step goes through
-    :func:`gh_clip_rings_robust`, which verifies the boolean identities
+    :func:`gh_split_rings_robust`, which verifies the boolean identities
     and ε-perturb-retries degenerate touches.
 
     Returns the union's ring set; Σ signed ring areas = the union
@@ -1056,7 +913,7 @@ def union_many(rings: list[np.ndarray]) -> list[np.ndarray]:
             acc.append(ring.copy())
             boxes.append(bb)
             continue
-        acc = gh_clip_rings_robust(acc, [ring], "union")
+        acc = gh_split_rings_robust(acc, [ring], want_union=True)[2]
         boxes = [
             (
                 float(g[:, 0].min()),
@@ -1074,7 +931,7 @@ def union_ring_sets(ring_sets: list[list[np.ndarray]]) -> list[np.ndarray]:
     CCW, holes CW) — the holed-input generalization of
     :func:`union_many`, which normalizes every input ring CCW and so
     would flip a hole into a positive polygon. Every step goes through
-    :func:`gh_clip_rings_robust`; adjacent sets sharing coincident
+    :func:`gh_split_rings_robust`; adjacent sets sharing coincident
     boundary runs (e.g. the faces of one planar arrangement) are
     exactly the degeneracy class the robust wrapper perturb-retries."""
     acc: list[np.ndarray] = []
@@ -1100,7 +957,7 @@ def union_ring_sets(ring_sets: list[list[np.ndarray]]) -> list[np.ndarray]:
         ):
             acc = acc + [r.copy() for r in rs]
             continue
-        acc = gh_clip_rings_robust(acc, rs, "union")
+        acc = gh_split_rings_robust(acc, rs, want_union=True)[2]
     return acc
 
 
@@ -1485,13 +1342,6 @@ def rasterize_ring(
 # -------------------------------------------------------------- distances ---
 
 
-def planar_dist2(
-    ax: np.ndarray, ay: np.ndarray, bx: np.ndarray, by: np.ndarray
-) -> np.ndarray:
-    """Squared planar distance — the oracle-portable metric (pure * + -)."""
-    return (ax - bx) ** 2 + (ay - by) ** 2
-
-
 def haversine_km(ax, ay, bx, by) -> np.ndarray:
     la1, lo1, la2, lo2 = map(np.radians, (ay, ax, by, bx))
     h = np.sin((la2 - la1) / 2) ** 2 + np.cos(la1) * np.cos(la2) * np.sin((lo2 - lo1) / 2) ** 2
@@ -1504,107 +1354,3 @@ def psnr(a: np.ndarray, b: np.ndarray) -> float:
     if mse == 0.0:
         return float("inf")
     return 10.0 * np.log10(255.0**2 / mse)
-
-
-def gh_split_rings_robust(
-    a_rings: list[np.ndarray],
-    b_rings: list[np.ndarray],
-    rel_tol: float = 1e-9,
-    max_tries: int = 5,
-    want_union: bool = False,
-):
-    """(A ∩ B, A ∖ B) in ONE verified pass — the face-split primitive
-    the mosaic family folds over [hypothesis sweep r3: the raw kernel
-    crashes or silently corrupts on coincident layers — duplicate
-    features, shared edge runs — which the general-position fixture
-    oracles never exercise]. Same net as :func:`gh_clip_rings_robust`:
-    symbolic-incidence pre-trigger, boolean-identity + measure-bound
-    verification, ε-perturb retry on failure — but both outputs come
-    from the same attempt, so the split costs one verification instead
-    of two wrapped calls."""
-    a_rings = [np.asarray(r, dtype=float) for r in a_rings]
-    b_rings = [np.asarray(r, dtype=float) for r in b_rings]
-    if not a_rings:
-        empty_u = [r.copy() for r in b_rings]
-        return ([], [], empty_u) if want_union else ([], [])
-    if not b_rings:
-        keep = [r.copy() for r in a_rings]
-        return (
-            ([], keep, [r.copy() for r in a_rings]) if want_union else ([], keep)
-        )
-    anchor = _local_anchor(a_rings + b_rings)
-    if anchor is not None:
-        moved = gh_split_rings_robust(
-            [r - anchor for r in a_rings],
-            [r - anchor for r in b_rings],
-            rel_tol,
-            max_tries,
-            want_union,
-        )
-        return tuple([g + anchor for g in part] for part in moved)
-    frame = _verification_frame(a_rings + b_rings)
-    area_a = _area_sum(a_rings, frame)
-    area_b = _area_sum(b_rings, frame)
-    span = max(
-        (
-            max(float(r[:, 0].max() - r[:, 0].min()), float(r[:, 1].max() - r[:, 1].min()))
-            for r in a_rings + b_rings
-        ),
-        default=1.0,
-    )
-    last_err: Exception | None = None
-    start = 1 if _exact_incidence(a_rings, b_rings) else 0
-    # A-SPREAD last-resort tier — see gh_clip_rings_robust / _spread_shifts
-    spread_tries = 3 if len(a_rings) > 1 else 0
-    for k in range(start, max_tries + spread_tries):
-        if k == 0:
-            a_try, b_try = a_rings, b_rings
-            area_ref = area_a
-        elif k < max_tries:
-            a_try = a_rings
-            area_ref = area_a
-            shift = _attempt_shift(k, span, a_rings, b_rings)
-            b_try = [r + shift for r in b_rings]
-            if _exact_incidence(a_rings, b_try):
-                # see gh_clip_rings_robust: residue re-coincidence guard
-                last_err = ValueError("perturbed attempt still incident")
-                continue
-        else:
-            a_try = [
-                r + s for r, s in zip(a_rings, _spread_shifts(a_rings, k, span))
-            ]
-            b_try = b_rings
-            area_ref = _area_sum(a_try, frame)
-            if _exact_incidence(a_try, b_try):
-                last_err = ValueError("spread attempt still incident")
-                continue
-        try:
-            inter = gh_clip_rings(a_try, b_try, "intersection")
-            diff = gh_clip_rings(a_try, b_try, "difference")
-            got = _area_sum(inter + diff, frame)
-            scale = max(abs(area_ref), 1.0)
-            if abs(got - area_ref) > rel_tol * scale:
-                raise ValueError("boolean identity violated")
-            i_got = _area_sum(inter, frame)
-            d_got = got - i_got
-            tol = rel_tol * max(abs(area_ref) + abs(area_b), 1.0)
-            if not (-tol <= i_got <= min(area_ref, area_b) + tol):
-                raise ValueError("intersection measure out of bounds")
-            if not (-tol <= d_got <= area_ref + tol):
-                raise ValueError("difference measure out of bounds")
-            if not want_union:
-                return inter, diff
-            union = gh_clip_rings(a_try, b_try, "union")
-            u_got = _area_sum(union, frame)
-            if abs(u_got - (area_ref + area_b - i_got)) > tol:
-                raise ValueError("union identity violated")
-            if u_got < max(area_ref, area_b) - tol:
-                raise ValueError("union measure out of bounds")
-            return inter, diff, union
-        except ValueError as e:
-            last_err = e
-            continue
-    raise ValueError(
-        f"gh_split_rings_robust: degenerate input not resolved after "
-        f"{max_tries} perturbed attempts"
-    ) from last_err

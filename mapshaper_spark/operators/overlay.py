@@ -445,12 +445,13 @@ def join_interpolate(
 
 def clip_polygons_general(subject: DataFrame, clip: DataFrame) -> DataFrame:
     """-clip piece GEOMETRY for GENERAL (concave) polygon pairs via the
-    Greiner–Hormann kernel [NEXT.md r2→r3 #1; geometry.gh_intersection]:
-    unlike the convex-window S-H path this emits the true piece rings of
-    concave×concave intersections, including multiple disjoint pieces
-    per pair. Simple single-ring polygons in general position (the
-    kernel raises loudly on degenerate touches). Same bbox-candidate
-    prune + broadcast shape as clip_polygons.
+    Greiner–Hormann kernel [NEXT.md r2→r3 #1;
+    geometry.gh_split_rings_robust]: unlike the convex-window S-H path
+    this emits the true piece rings of concave×concave intersections,
+    including multiple disjoint pieces per pair. Simple single-ring
+    polygons; degenerate touches perturb-retry in the robust wrapper
+    (clean general-position pairs keep the unperturbed trace). Same
+    bbox-candidate prune + broadcast shape as clip_polygons.
 
     Output: (subject_id, clip_id, piece_idx, n_vertices, area)."""
     pairs = _candidate_pairs(subject, clip)
@@ -459,10 +460,10 @@ def clip_polygons_general(subject: DataFrame, clip: DataFrame) -> DataFrame:
         for pdf in it:
             out = []
             for _, r in pdf.iterrows():
-                pieces = geometry.gh_intersection(
-                    np.column_stack([r["sxs"], r["sys"]]),
-                    np.column_stack([r["cxs"], r["cys"]]),
-                )
+                pieces = geometry.gh_split_rings_robust(
+                    [np.column_stack([r["sxs"], r["sys"]])],
+                    [np.column_stack([r["cxs"], r["cys"]])],
+                )[0]
                 for i, ring in enumerate(pieces):
                     a2, _, _ = geometry.shoelace_seq_local(ring[:, 0], ring[:, 1])
                     out.append(
@@ -536,7 +537,7 @@ def gh_boolean_pair_areas(subject: DataFrame, clip: DataFrame) -> DataFrame:
 def gh_boolean_areas_rings(a_features: DataFrame, b_features: DataFrame) -> DataFrame:
     """Multi-ring (holed, even-odd) GH booleans per matching poly_id:
     (poly_id, inter_area, diff_area, union_area) from signed ring sums
-    over geometry.gh_clip_rings. Both inputs are ring tables
+    over geometry.gh_split_rings_robust. Both inputs are ring tables
     (poly_id, ring_idx, xs, ys); the cogroup hands each feature pair's
     full ring sets to the kernel — rings flow through the plan, no
     driver closure."""
@@ -769,9 +770,9 @@ def mosaic_replicate(
                                     (sx_lo, sy_hi),
                                 ]
                             )
-                            strip_cache[ix] = geometry.gh_clip_rings_robust(
-                                [ring], [strip], "intersection"
-                            )
+                            strip_cache[ix] = geometry.gh_split_rings_robust(
+                                [ring], [strip]
+                            )[0]
                         box = np.array(
                             [
                                 (bx_lo[i], by_lo[i]),
@@ -780,9 +781,9 @@ def mosaic_replicate(
                                 (bx_lo[i], by_hi[i]),
                             ]
                         )
-                        pieces = geometry.gh_clip_rings_robust(
-                            strip_cache[ix], [box], "intersection"
-                        )
+                        pieces = geometry.gh_split_rings_robust(
+                            strip_cache[ix], [box]
+                        )[0]
                     elif covered[i]:
                         pieces = [
                             np.array(
@@ -2210,9 +2211,9 @@ def inlay_area(a_features: DataFrame, b_features: DataFrame) -> DataFrame:
     target layer, keeping both; SURVEY.md §2.6]: every target feature
     minus the UNION of the inlay polygons, computed as a fold of
     multi-ring GH differences (each step's ring-set output is the next
-    step's subject — gh_clip_rings takes multi-ring subjects, so carved
-    holes and split pieces survive subsequent steps). The inlay layer
-    itself passes through unchanged (not re-emitted here).
+    step's subject — gh_split_rings_robust takes multi-ring subjects,
+    so carved holes and split pieces survive subsequent steps). The
+    inlay layer itself passes through unchanged (not re-emitted here).
 
     Both sides are DataFrames [VERDICT r2 #6 — the B side used to ride
     the driver closure]: a_features (poly_id, ring_idx, xs, ys),

@@ -261,7 +261,9 @@ def _project(spark, df, o):
     evaluate interpreted, and the measured A/B says codegen beats the
     saved shuffle 2.7-9.6x there (see the RUNTIME_ITERATED note).
     The spec key "inplace" overrides either way (true forces the
-    builder route, false forces explode)."""
+    builder route, false forces explode); true raises when the name
+    has no builder or the builder rejects the args, instead of quietly
+    taking the explode route."""
     from ..functions import proj as proj_fn
 
     name = o["name"]
@@ -270,6 +272,10 @@ def _project(spark, df, o):
     kwargs = o.get("args", {})
     factory = proj_fn.XY_BUILDERS.get(name)
     inplace = o.get("inplace")
+    if inplace is True and factory is None:
+        raise ValueError(
+            f"inplace: projection {name!r} has no column-pair builder"
+        )
     if inplace is False or (
         inplace is not True and name in proj_fn.RUNTIME_ITERATED
     ):
@@ -277,7 +283,11 @@ def _project(spark, df, o):
     if factory is not None:
         try:
             fxy = factory(**kwargs)
-        except TypeError:
+        except TypeError as e:
+            if inplace is True:
+                raise ValueError(
+                    f"inplace: builder for {name!r} rejects args {kwargs!r}"
+                ) from e
             fxy = None  # kwargs the builder doesn't take -> explode path
         if fxy is not None:
             return proj_fn.project_layer_inplace(df, fxy).select(

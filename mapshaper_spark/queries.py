@@ -647,7 +647,7 @@ def q_simplify_pct(spark: SparkSession, sf_dir: str) -> DataFrame:
     (percentile_approx cut is engine-specific); pytest asserts the
     monotonicity invariant n_kept(80) >= n_kept(50) >= n_kept(20)."""
     arcs = topology.arcs_df(spark, fixtures.POLYLINES)
-    thr = simplify_op.compute_thresholds(arcs, "visvalingam").cache()
+    thr = simplify_op.compute_thresholds(arcs, "visvalingam").localCheckpoint()
     outs = []
     for pct in (0.8, 0.5, 0.2):
         t = simplify_op.threshold_for_pct(thr, pct)
@@ -3260,6 +3260,11 @@ _SUBSTRING_SPANS_SQL = """
 def _substring_grams(spark: SparkSession, sf_dir: str):
     """(base, g) for the span-dedup family: per-doc word counts and
     positioned 4-grams."""
+    # posexplode positions are 0-based while the DuckDB oracle's
+    # generate_series positions are 1-based: the family hash-matches
+    # only because every emitted column (gap breaks, span lengths,
+    # counts) is invariant under that uniform shift — emitting absolute
+    # span start/end positions would diverge between the engines
     d = testdata.load(spark, sf_dir, "documents").select(
         "doc_id", F.split("text", " ").alias("t")
     )

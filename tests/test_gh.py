@@ -1,6 +1,7 @@
-"""Greiner–Hormann general polygon intersection: unit geometries with
-hand-computed areas, multi-piece outputs, containment/disjoint edges,
-and cross-validation against the independent Sutherland–Hodgman path."""
+"""Greiner–Hormann general polygon booleans (the gh_clip_rings kernel on
+single-ring pairs): unit geometries with hand-computed areas,
+multi-piece outputs, containment/disjoint edges, and cross-validation
+against the independent Sutherland–Hodgman path."""
 
 from __future__ import annotations
 
@@ -12,6 +13,10 @@ from mapshaper_spark import geometry as G
 
 def _area(rings) -> float:
     return sum(abs(G.shoelace_area(r[:, 0], r[:, 1])) for r in rings)
+
+
+def _clip(a, b, op="intersection"):
+    return G.gh_clip_rings([a], [b], op)
 
 
 def _sq(x0, y0, w, h):
@@ -31,19 +36,19 @@ U_RING = np.array(
 
 
 def test_offset_squares():
-    out = G.gh_intersection(_sq(0, 0, 2, 2), _sq(1, 1, 2, 2))
+    out = _clip(_sq(0, 0, 2, 2), _sq(1, 1, 2, 2))
     assert len(out) == 1
     assert _area(out) == pytest.approx(1.0)
 
 
 def test_containment_both_ways():
     big, small = _sq(0, 0, 10, 10), _sq(2, 2, 1, 1)
-    assert _area(G.gh_intersection(big, small)) == pytest.approx(1.0)
-    assert _area(G.gh_intersection(small, big)) == pytest.approx(1.0)
+    assert _area(_clip(big, small)) == pytest.approx(1.0)
+    assert _area(_clip(small, big)) == pytest.approx(1.0)
 
 
 def test_disjoint():
-    assert G.gh_intersection(_sq(0, 0, 1, 1), _sq(5, 5, 1, 1)) == []
+    assert _clip(_sq(0, 0, 1, 1), _sq(5, 5, 1, 1)) == []
 
 
 def test_L_with_box_over_notch():
@@ -52,7 +57,7 @@ def test_L_with_box_over_notch():
     box = _sq(1.0, 1.0, 2.0, 2.0)  # [1,3]x[1,3]
     # L material in [1,3]x[1,3]: bottom bar strip [1,3]x[1,1.5] = 1.0
     # plus column strip [1,1.5]x[1.5,3] = 0.75
-    out = G.gh_intersection(L_RING, box)
+    out = _clip(L_RING, box)
     assert _area(out) == pytest.approx(1.75)
 
 
@@ -60,14 +65,14 @@ def test_U_with_bar_gives_two_pieces():
     """A horizontal bar across the U's two arms intersects in TWO
     disjoint pieces."""
     bar = _sq(-1.0, 2.0, 7.0, 1.0)  # y [2,3], spans both arms
-    out = G.gh_intersection(U_RING, bar)
+    out = _clip(U_RING, bar)
     assert len(out) == 2
     assert _area(out) == pytest.approx(2 * 1.5 * 1.0)
 
 
 def test_symmetry_subject_clip_swap():
-    a = G.gh_intersection(L_RING, _sq(0.5, 0.5, 3.0, 3.0))
-    b = G.gh_intersection(_sq(0.5, 0.5, 3.0, 3.0), L_RING)
+    a = _clip(L_RING, _sq(0.5, 0.5, 3.0, 3.0))
+    b = _clip(_sq(0.5, 0.5, 3.0, 3.0), L_RING)
     assert _area(a) == pytest.approx(_area(b))
 
 
@@ -81,7 +86,7 @@ def test_cross_validate_vs_sutherland_hodgman(poly_idx):
     cx = float(ring[:, 0].mean())
     cy = float(ring[:, 1].mean())
     win = _sq(cx - 9.7, cy - 7.3, 19.4, 14.6)  # odd offsets: general position
-    got = _area(G.gh_intersection(ring, win))
+    got = _area(_clip(ring, win))
     sx, sy = G.clip_ring_convex(ring[:, 0], ring[:, 1], win)
     want = abs(G.shoelace_seq(sx, sy)[0]) / 2.0 if len(sx) >= 3 else 0.0
     assert got == pytest.approx(want, rel=1e-12)
@@ -108,16 +113,16 @@ def test_boolean_identities(a, b):
     hole rings subtract. Validates all three flag polarities at once."""
     area_a = abs(G.shoelace_area(a[:, 0], a[:, 1]))
     area_b = abs(G.shoelace_area(b[:, 0], b[:, 1]))
-    inter = _area(G.gh_intersection(a, b))
-    diff = abs(_signed_area(G.gh_difference(a, b)))
-    union = abs(_signed_area(G.gh_union(a, b)))
+    inter = _area(_clip(a, b))
+    diff = abs(_signed_area(_clip(a, b, "difference")))
+    union = abs(_signed_area(_clip(a, b, "union")))
     assert inter + diff == pytest.approx(area_a, rel=1e-12)
     assert union == pytest.approx(area_a + area_b - inter, rel=1e-12)
 
 
 def test_difference_containment_yields_hole_ring():
     big, small = _sq(0, 0, 10, 10), _sq(3, 3, 2, 2)
-    out = G.gh_difference(big, small)
+    out = _clip(big, small, "difference")
     assert len(out) == 2
     assert _signed_area(out) == pytest.approx(100.0 - 4.0)
     # even-odd check: a point inside the hole is OUTSIDE the region
@@ -126,13 +131,13 @@ def test_difference_containment_yields_hole_ring():
 
 
 def test_union_disjoint_keeps_both():
-    out = G.gh_union(_sq(0, 0, 1, 1), _sq(5, 5, 1, 1))
+    out = _clip(_sq(0, 0, 1, 1), _sq(5, 5, 1, 1), "union")
     assert len(out) == 2
     assert _signed_area(out) == pytest.approx(2.0)
 
 
 def test_difference_disjoint_keeps_subject():
-    out = G.gh_difference(_sq(0, 0, 1, 1), _sq(5, 5, 1, 1))
+    out = _clip(_sq(0, 0, 1, 1), _sq(5, 5, 1, 1), "difference")
     assert len(out) == 1 and _signed_area(out) == pytest.approx(1.0)
 
 
@@ -196,7 +201,7 @@ def test_concave_concave_L_pair():
     #   other bar [0.5,3]x[0.5,1] sits fully inside L's bottom bar: 2.5*0.5
     #   other column [2,3]x[1,3] ∩ L bar = [2,3]x[1,1.5] = 0.5
     #   other column ∩ L column ([0,1.5]x...) = empty
-    out = G.gh_intersection(L_RING, other)
+    out = _clip(L_RING, other)
     assert _area(out) == pytest.approx(2.5 * 0.5 + 0.5)
 
 
@@ -234,10 +239,9 @@ def test_gh_clip_donut_union_orientation():
     """r3 review regression: two C-shapes closing a picture frame — the
     traced outer ring's CENTROID lies inside the enclosed hole, so
     centroid-based orientation flipped the outer boundary CW and the
-    union's signed area came out -98.69 instead of 30.825. gh_clip must
-    orient with near-boundary interior points (like gh_clip_rings) and
-    agree with the multi-ring kernel on all three ops + the boolean
-    identity."""
+    union's signed area came out -98.69 instead of 30.825. The kernel
+    orients with near-boundary interior points; the union keeps its
+    true area and the boolean identity holds."""
     c1 = np.array(
         [(0, 0), (7.8, 0), (7.8, 0.9), (1.1, 0.9), (1.1, 7.1), (7.8, 7.1), (7.8, 8), (0, 8)],
         float,
@@ -250,12 +254,6 @@ def test_gh_clip_donut_union_orientation():
     def area(rings):
         return sum(G.shoelace_area(r[:, 0], r[:, 1]) for r in rings)
 
-    for op in ("union", "intersection", "difference"):
-        a_single = area(G.gh_clip(c1, c2, op))
-        a_rings = area(G.gh_clip_rings([c1], [c2], op))
-        assert a_single == pytest.approx(a_rings, rel=1e-12), op
-    a = area(G.gh_clip(c1, c2, "intersection")) + area(
-        G.gh_clip(c1, c2, "difference")
-    )
+    a = area(_clip(c1, c2, "intersection")) + area(_clip(c1, c2, "difference"))
     assert a == pytest.approx(G.shoelace_area(c1[:, 0], c1[:, 1]), rel=1e-12)
-    assert area(G.gh_clip(c1, c2, "union")) == pytest.approx(30.825, rel=1e-9)
+    assert area(_clip(c1, c2, "union")) == pytest.approx(30.825, rel=1e-9)

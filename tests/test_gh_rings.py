@@ -98,14 +98,14 @@ def test_robust_wrapper_handles_vertex_on_edge():
     diamond = [
         np.array([(5.0, 10.0), (8.0, 13.0), (5.0, 16.0), (2.0, 13.0)])
     ]  # bottom vertex exactly on the square's top edge y=10
-    out = G.gh_clip_rings_robust(square, diamond, "intersection")
+    out = G.gh_split_rings_robust(square, diamond)[0]
     # true overlap is measure-zero (diamond only touches) → ~0 area
     assert abs(_signed(out)) < 1e-6
 
     crossing = [
         np.array([(5.0, 8.0), (9.0, 12.0), (5.0, 16.0), (1.0, 12.0)])
     ]  # dips 2 into the square; its left/right vertices are outside
-    out2 = G.gh_clip_rings_robust(square, crossing, "intersection")
+    out2 = G.gh_split_rings_robust(square, crossing)[0]
     # overlap = triangle (5,8),(7,10),(3,10): area 4... compute: the
     # diamond below y=10: vertices (5,8) with edges to (9,12)/(1,12)
     # crossing y=10 at x=7 and x=3 → triangle base 4, height 2 → area 4
@@ -117,7 +117,7 @@ def test_robust_wrapper_exact_when_general_position():
     w = fixtures.CLIP_WINDOWS[1]
     win = [_sq(w["x0"], w["y0"], w["x1"] - w["x0"], w["y1"] - w["y0"])]
     a = _signed(G.gh_clip_rings(feat, win, "intersection"))
-    b = _signed(G.gh_clip_rings_robust(feat, win, "intersection"))
+    b = _signed(G.gh_split_rings_robust(feat, win)[0])
     assert a == b  # no perturbation on clean input
 
 

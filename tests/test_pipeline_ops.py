@@ -6,6 +6,7 @@ asserts the output EXACTLY equals the direct operator chain (the ops
 are deterministic: content-hash ids, bounds-derived grids), so the
 wiring layer can never drift from the operators it names."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from mapshaper_spark import fixtures
@@ -135,6 +136,18 @@ def test_project_spec_routes_zero_shuffle(spark):
     )
     want = proj_fn.project_layer(feats, proj_fn.to_webmercator, out=("mx", "my"))
     assert _rows(got, cols) == _rows(want, cols)
+    # an explicit "inplace": true never falls back silently: no builder
+    # for the name, or a builder rejecting the args, raises
+    with pytest.raises(ValueError, match="hammer_inverse"):
+        pipeline.OPS["project"](
+            spark, feats, {"name": "hammer_inverse", "inplace": True}
+        )
+    with pytest.raises(ValueError, match="to_webmercator"):
+        pipeline.OPS["project"](
+            spark,
+            feats,
+            {"name": "to_webmercator", "args": {"lon": "lon"}, "inplace": True},
+        )
 
 
 def test_unknown_names_raise(spark):

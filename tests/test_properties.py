@@ -9,7 +9,6 @@ Invariants per (A, B) pair and ops (∩, \\, ∪):
   area(A∩B) + area(A\\B) == area(A)
   area(A∩B) + area(A∪B) == area(A) + area(B)
   0 <= area(A∩B) <= min(area(A), area(B))
-  single-ring gh_clip == multi-ring gh_clip_rings on the same pair
 """
 
 from __future__ import annotations
@@ -60,30 +59,15 @@ def test_gh_boolean_identities_random_stars(p):
     b = _star(nb, rb1, rb2, bx, by, rot)
     area_a = G.shoelace_area(a[:, 0], a[:, 1])
     area_b = G.shoelace_area(b[:, 0], b[:, 1])
-    inter = _area(G.gh_clip(a, b, "intersection"))
-    diff = _area(G.gh_clip(a, b, "difference"))
-    union = _area(G.gh_clip(a, b, "union"))
+    inter = _area(G.gh_clip_rings([a], [b], "intersection"))
+    diff = _area(G.gh_clip_rings([a], [b], "difference"))
+    union = _area(G.gh_clip_rings([a], [b], "union"))
     scale = max(area_a, area_b)
     assert -1e-9 * scale <= inter <= min(area_a, area_b) + 1e-9 * scale
     assert inter + diff == pytest.approx(area_a, rel=1e-9, abs=1e-9 * scale)
     assert inter + union == pytest.approx(
         area_a + area_b, rel=1e-9, abs=1e-9 * scale
     )
-
-
-@settings(max_examples=25, deadline=None)
-@given(_pair)
-def test_gh_single_ring_matches_ring_set(p):
-    na, nb, ra1, ra2, rb1, rb2, bx, by, rot = p
-    a = _star(na, ra1, ra2, 0.0, 0.0, 0.017)
-    b = _star(nb, rb1, rb2, bx, by, rot)
-    scale = max(
-        G.shoelace_area(a[:, 0], a[:, 1]), G.shoelace_area(b[:, 0], b[:, 1])
-    )
-    for op in ("intersection", "difference", "union"):
-        single = _area(G.gh_clip(a, b, op))
-        rings = _area(G.gh_clip_rings([a], [b], op))
-        assert single == pytest.approx(rings, rel=1e-9, abs=1e-9 * scale), op
 
 
 @settings(max_examples=25, deadline=None)
@@ -385,7 +369,7 @@ def test_split_robust_disjoint_accumulator_bridge():
     inter, diff = G.gh_split_rings_robust([A, B], [C])
     assert _area(inter) == pytest.approx(2.0, rel=1e-6)
     assert _area(diff) == pytest.approx(3.0, rel=1e-6)
-    union = G.gh_clip_rings_robust([A, B], [C], "union")
+    union = G.gh_split_rings_robust([A, B], [C], want_union=True)[2]
     assert _area(union) == pytest.approx(7.0, rel=1e-6)
 
 
@@ -1064,7 +1048,7 @@ def test_split_robust_offset_heavy_frame():
     got_d = sum(G.shoelace_area_local(g[:, 0], g[:, 1]) for g in diff)
     assert got_i == pytest.approx(want_inter, rel=1e-6)
     assert got_d == pytest.approx(want_a - want_inter, rel=1e-6)
-    union = G.gh_clip_rings_robust([rects[0]], [rects[1]], "union")
+    union = G.gh_split_rings_robust([rects[0]], [rects[1]], want_union=True)[2]
     got_u = sum(G.shoelace_area_local(g[:, 0], g[:, 1]) for g in union)
     assert got_u == pytest.approx(
         want_a + bx1[2] * bx1[2] - want_inter, rel=1e-6

@@ -1,62 +1,43 @@
-"""kNN / nearest-feature join — cell-ring candidate join with an exact
+"""kNN / nearest-feature join — cell-ring candidate lists with an exact
 fallback [SURVEY.md §2.3 "kNN / nearest-feature join"; RULE].
 
 Distributed strategy (the EDBT/SIGMOD distributed-kNN-join pattern,
-PAPERS.md "Distributed Stream KNN Join"):
+PAPERS.md "Distributed Stream KNN Join" and "To Partition, or Not to
+Partition"): the targets are the dim side, so they are read to the
+driver once and every candidate structure is built there and broadcast;
+the query points are never shuffled.
 
-1. Targets are exploded to their cell *and* every ring-1 neighbor cell
-   (9 rows per target) — replicating the small side instead of the big
-   side, so the query points shuffle at most once on cell_id.
-2. Query points equi-join candidates on cell_id; per-query argmin via a
-   window with a (dist, target_id) tiebreak for determinism.
-3. **Exactness guarantee**: a candidate found at planar distance d is
-   provably the global nearest iff d <= one cell height (any point
-   outside the searched 3x3 block is at least that far away). Queries
-   that fail the guarantee (or found no candidate) fall back to a
-   broadcast brute-force pass — asymptotically tiny when the grid
-   resolution matches target density.
+1. For each expansion ring r the driver builds one candidate table,
+   ``cell_id → array<struct<target_id, tx, ty>>``: every target within
+   Chebyshev distance r of the cell (out-of-grid offsets dropped).
+2. Each query point looks up its own cell's list in a broadcast hash
+   join and takes its top k in one projection: ``transform`` computes
+   ``dist2`` per candidate, then ``array_min`` (k=1) or
+   ``slice(sort_array(...), 1, k)`` (k>1) ranks by (dist2, target_id).
+3. **Exactness guarantee**: a k-th candidate at planar distance d is
+   provably among the global k nearest iff d <= r cell heights (any
+   target outside the searched block is at least that far away). The
+   test is column math; points that fail it (or found fewer than k
+   candidates) get the next ring's wider list, and the residual of the
+   last ring gets the all-targets list (brute force) — asymptotically
+   tiny when the grid resolution matches target density.
 
 The fallback makes the operator *exact*, so it is oracle-checkable
-against an all-pairs DuckDB cross join; the ring join carries ~all the
-volume at scale. Distance metric is squared planar degrees (pure
-``* + -`` → bit-identical in Spark and DuckDB).
+against an all-pairs DuckDB cross join. Distance metric is squared
+planar degrees (pure ``* + -`` → bit-identical in Spark and DuckDB).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import cells
 
-DEFAULT_RES = 5  # ~11x5.6 degree cells; targets are dim-sized
-
 
 def _dist2(ax, ay, bx, by):
     return (ax - bx) * (ax - bx) + (ay - by) * (ay - by)
-
-
-def _explode_neighbors(targets: DataFrame, res: int, ring: int = 1) -> DataFrame:
-    """Each target replicated to every cell within Chebyshev distance
-    ``ring`` of its own (clamped) — (2·ring+1)² rows per target. ring=1
-    is the classic 9-cell block; the k-conditional layout uses ring=2
-    for k>1 so the FIRST stage's guarantee already covers the k-th
-    neighbor and the second ring stage disappears."""
-    n = 1 << res
-    ix, iy = cells.grid_xy_sql("lon", "lat", res)
-    t = targets.withColumn("_ix", F.expr(ix)).withColumn("_iy", F.expr(iy))
-    offs = [F.lit(i) for i in range(-ring, ring + 1)]
-    t = t.withColumn("_dx", F.explode(F.array(*offs))).withColumn(
-        "_dy", F.explode(F.array(*offs))
-    )
-    t = t.filter(
-        (F.col("_ix") + F.col("_dx")).between(0, n - 1)
-        & (F.col("_iy") + F.col("_dy")).between(0, n - 1)
-    )
-    morton = cells.morton_sql("(_ix + _dx)", "(_iy + _dy)")
-    return t.withColumn("cell_id", F.expr(f"{morton} * 32 + {res}")).drop(
-        "_ix", "_iy", "_dx", "_dy"
-    )
 
 
 def auto_res(n_targets: int, per_cell: float = 4.0) -> int:
@@ -66,45 +47,77 @@ def auto_res(n_targets: int, per_cell: float = 4.0) -> int:
     res = round(log4(n/per_cell)), clamped to [2, 10]."""
     import math
 
-    cells = max(1.0, n_targets / per_cell)
-    return max(2, min(10, round(math.log2(cells) / 2.0)))
+    n_cells = max(1.0, n_targets / per_cell)
+    return max(2, min(10, round(math.log2(n_cells) / 2.0)))
 
 
-def _with_ring_cells(df: DataFrame, res: int, ring: int) -> DataFrame:
-    """Explode each point to every cell in its Chebyshev ring-``ring``
-    neighborhood. ONE morton expression over an exploded literal offset
-    table (49 inlined morton expressions would blow up Catalyst planning
-    time — measured 17x slower)."""
+def _candidate_lists(tgt, res: int, ring: int):
+    """Arrow table ``(_cell, _c)``: for every cell that has one, the list
+    of targets within Chebyshev distance ``ring`` of it, built with numpy
+    on the driver. Offsets are dropped (not clamped) at the grid edge:
+    clamping would list a border target twice in one cell."""
+    import pyarrow as pa
+
     n = 1 << res
-    ix, iy = cells.grid_xy_sql("lon", "lat", res)
-    offsets = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dy in range(-ring, ring + 1)
-            for dx in range(-ring, ring + 1)
-        ]
+    lon = tgt.column("lon").to_numpy().astype(np.float64)
+    lat = tgt.column("lat").to_numpy().astype(np.float64)
+    ix, iy = cells.grid_xy_np(lon, lat, res)
+    d = np.arange(-ring, ring + 1)
+    jx, jy = np.broadcast_arrays(
+        ix[:, None, None] + d[None, None, :], iy[:, None, None] + d[None, :, None]
     )
-    df = (
-        df.withColumn("_ix", F.expr(ix))
-        .withColumn("_iy", F.expr(iy))
-        .withColumn("_o", F.explode(offsets))
-        .withColumn("_jx", F.col("_ix") + F.col("_o.dx"))
-        .withColumn("_jy", F.col("_iy") + F.col("_o.dy"))
-        # drop (not clamp) out-of-grid offsets: clamping would duplicate
-        # border cells and double-count candidates in the rank
-        .filter(F.col("_jx").between(0, n - 1) & F.col("_jy").between(0, n - 1))
-    )
-    df = df.withColumn(
-        "cell_id", F.expr(f"{cells.morton_sql('_jx', '_jy')} * 32 + {res}")
-    )
-    return df.drop("_ix", "_iy", "_o", "_jx", "_jy")
+    keep = (jx >= 0) & (jx < n) & (jy >= 0) & (jy < n)
+    who = np.broadcast_to(np.arange(len(lon))[:, None, None], keep.shape)[keep]
+    cid = cells.cell_id_from_xy_np(jx[keep], jy[keep], res)
+    order = np.argsort(cid, kind="stable")
+    cid, who = cid[order], who[order]
+    uniq, starts = np.unique(cid, return_index=True)
+    offsets = pa.array(np.append(starts, len(cid)), pa.int32())
+    lists = pa.ListArray.from_arrays(offsets, _items(tgt).take(who))
+    return pa.table({"_cell": pa.array(uniq, pa.int64()), "_c": lists})
 
 
-def _rank_topk(cand: DataFrame, k: int) -> DataFrame:
-    w = Window.partitionBy("point_id").orderBy("dist2", "target_id")
-    return cand.withColumn("knn_rank", F.row_number().over(w)).filter(
-        F.col("knn_rank") <= k
+def _all_targets(tgt):
+    """Arrow table ``(_c)``: one row listing every target (brute force)."""
+    import pyarrow as pa
+
+    offsets = pa.array([0, tgt.num_rows], pa.int32())
+    return pa.table({"_c": pa.ListArray.from_arrays(offsets, _items(tgt))})
+
+
+def _items(tgt):
+    """``struct<target_id, tx, ty>`` per target, in the targets' own types."""
+    import pyarrow as pa
+
+    cols = [tgt.column(c).combine_chunks() for c in ("target_id", "lon", "lat")]
+    return pa.StructArray.from_arrays(cols, names=["target_id", "tx", "ty"])
+
+
+def _resolve(cur: DataFrame, tab: DataFrame, on, k: int, g2: float | None) -> DataFrame:
+    """Left-join the candidate lists ``tab`` to the rows of ``cur`` not yet
+    resolved (``on AND NOT _ok``) and take their top k into ``_top``;
+    ``_ok`` marks rows whose k-th hit is within ``sqrt(g2)`` (g2=None:
+    the lists hold every target, so the answer is final)."""
+    cur = cur.join(F.broadcast(tab), on & ~F.col("_ok"), "left")
+    cand = F.transform(
+        "_c",
+        lambda c: F.struct(
+            _dist2(F.col("lon"), F.col("lat"), c["tx"], c["ty"]).alias("dist2"),
+            c["target_id"].alias("target_id"),
+        ),
     )
+    if k == 1:
+        # array_min, not array_sort: Spark 4 rewrites array_sort(x) with
+        # an interpreted lambda comparator
+        top = F.array(F.array_min(cand))
+    else:
+        top = F.slice(F.sort_array(cand), 1, k)
+    cur = cur.withColumn("_top", F.when(F.col("_ok"), F.col("_top")).otherwise(top))
+    if g2 is not None:
+        # get() is NULL (never an ANSI error) past the end of a short list
+        ok = F.get(F.col("_top"), k - 1)["dist2"] <= F.lit(g2)
+        cur = cur.withColumn("_ok", F.col("_ok") | F.coalesce(ok, F.lit(False)))
+    return cur.drop("_cell", "_c")
 
 
 def knn_join(
@@ -112,108 +125,50 @@ def knn_join(
     targets: DataFrame,
     k: int = 1,
     res: int | None = None,
-    expansion_rings: tuple[int, ...] | None = None,
+    expansion_rings: tuple[int, ...] = (1, 3),
 ) -> DataFrame:
     """Exact kNN join: (point cols..., target_id, dist2, knn_rank).
 
     points: (point_id, lon, lat); targets: (target_id, lon, lat).
-    res=None picks the resolution from the measured target count (the
-    dim side is counted anyway to size the broadcast).
+    Ties on dist2 break on target_id; a point gets min(k, #targets) rows.
+    res=None picks the resolution from the target count.
 
-    Adaptive ring expansion [NEXT.md #5]: round 1 searches a block of
-    the target grid (targets replicated, broadcast — the bulk of the
-    volume); points whose k-th hit isn't provably global retry with
-    progressively wider rings (candidate lists exploded on the PROBE
-    side, so the target table is never replicated by the big ring);
-    only the residual of the last ring falls back to brute force. At
-    scale this keeps the cross-join fallback to the (empty-region) tail
-    instead of every sparse-cell point.
-
-    K-CONDITIONAL stage layout [VERDICT r3 #5]: expansion_rings=None
-    resolves to (1, 3) for k=1 but (2,) for k>1 — the k-th neighbor
-    rarely passes the 1-cell guarantee, so at k>1 the second ring stage
-    (an extra shuffle + materialization + count) ran for nearly every
-    point; one 5x5 first block (targets replicated x25 instead of x9 —
-    trivial on the broadcast dim side) resolves those points in a
-    single stage. Results are identical either way (the operator is
-    exact); only the plan changes.
+    One lazy plan with no shuffle, no window and no driver round-trip
+    beyond the single read of the (dim-sized) targets: per ring a
+    conditional broadcast join ``_cell == _bk AND NOT _ok`` hands the
+    wider candidate list only to the rows the previous rings left
+    unresolved, so a wide ring costs nothing for resolved rows and the
+    same ring layout (1, 3) serves every k. The residual of the last ring
+    is joined to one all-targets list (brute force), and ``posexplode``
+    turns each point's top-k array into its output rows. Results do not
+    depend on ``res`` or ``expansion_rings`` (the operator is exact);
+    only the candidate volume does.
     """
+    spark = points.sparkSession
+    tgt = targets.select("target_id", "lon", "lat").toArrow()
     if res is None:
-        res = auto_res(targets.count())
-    if expansion_rings is None:
-        expansion_rings = (1, 3) if k == 1 else (2,)
+        res = auto_res(tgt.num_rows)
     cell_h = 180.0 / (1 << res)
 
-    pts = points.withColumn("cell_id", F.expr(cells.cell_sql("lon", "lat", res)))
-    ring0 = expansion_rings[0] if expansion_rings else 1
-    tgt9 = _explode_neighbors(
-        targets.select("target_id", "lon", "lat"), res, ring=ring0
-    ).select(
-        "cell_id", "target_id", F.col("lon").alias("tx"), F.col("lat").alias("ty")
+    cur = points.select(
+        "*",
+        F.expr(cells.cell_sql("lon", "lat", res)).alias("_bk"),
+        F.lit(None).alias("_top"),
+        F.lit(False).alias("_ok"),
     )
-    tgt_by_cell = (
-        targets.select("target_id", "lon", "lat")
-        .withColumn("cell_id", F.expr(cells.cell_sql("lon", "lat", res)))
-        .select("cell_id", "target_id", F.col("lon").alias("tx"), F.col("lat").alias("ty"))
+    for ring in expansion_rings:
+        tab = spark.createDataFrame(_candidate_lists(tgt, res, ring))
+        cur = _resolve(cur, tab, F.col("_bk") == F.col("_cell"), k, (ring * cell_h) ** 2)
+    cur = _resolve(cur, spark.createDataFrame(_all_targets(tgt)), F.lit(True), k, None)
+
+    # posexplode_outer + filter, not posexplode: on a non-outer generator
+    # Spark infers a size(_top) > 0 filter below it that evaluates the
+    # brute piece's top-k a second time. The filter also drops the null
+    # entry k=1 leaves when a point has no candidate (no targets at all).
+    out = cur.select(*points.columns, F.posexplode_outer("_top").alias("_pos", "_n"))
+    return out.filter(F.col("_n").isNotNull()).select(
+        *points.columns,
+        F.col("_n.target_id").alias("target_id"),
+        F.col("_n.dist2").alias("dist2"),
+        (F.col("_pos") + 1).alias("knn_rank"),
     )
-    allt = targets.select("target_id", F.col("lon").alias("tx"), F.col("lat").alias("ty"))
-    out_cols = [c for c in points.columns] + ["target_id", "dist2", "knn_rank"]
-
-    # Single-window resolve [VERDICT r2 #10]: the guarantee check rides
-    # the SAME window shuffle as the ranking (rank → filter top-k →
-    # per-point max/count over the already-partitioned frame) instead of
-    # a separate groupBy + broadcast-semi-join chain — one shuffle and
-    # one materialization per ring. localCheckpoint (not persist): the
-    # ranked frame feeds the resolved piece, the residual ids, AND the
-    # next ring's probe set; CacheManager entries from persist()
-    # accumulate across repeated operator invocations and degrade the
-    # session, while checkpoint RDDs are dropped by the ContextCleaner.
-    w_rank = Window.partitionBy("point_id").orderBy("dist2", "target_id")
-    w_pt = Window.partitionBy("point_id")
-
-    n_pts: int | None = None  # lazily counted once, to early-exit stages
-    n_resolved = 0
-    pieces = []
-    rest = pts
-    for i, ring in enumerate(expansion_rings):
-        if i == 0:
-            cand = rest.join(F.broadcast(tgt9), "cell_id")
-        else:
-            # skip the wider ring (and its probe explosion) when every
-            # point already resolved — one cheap count of the dim side
-            if n_pts is None:
-                n_pts = pts.count()
-            if n_resolved >= n_pts:
-                break
-            probe = _with_ring_cells(rest.drop("cell_id"), res, ring)
-            cand = probe.join(F.broadcast(tgt_by_cell), "cell_id")
-        cand = cand.withColumn(
-            "dist2", _dist2(F.col("lon"), F.col("lat"), F.col("tx"), F.col("ty"))
-        )
-        g2 = (ring * cell_h) ** 2
-        ranked = (
-            cand.withColumn("knn_rank", F.row_number().over(w_rank))
-            .filter(F.col("knn_rank") <= k)
-            .withColumn("_ok", (F.count(F.lit(1)).over(w_pt) >= k) & (F.max("dist2").over(w_pt) <= g2))
-            .localCheckpoint()
-        )
-        resolved = ranked.filter("_ok")
-        pieces.append(resolved.select(*out_cols))
-        ok_ids = resolved.select("point_id").distinct()
-        n_resolved += ok_ids.count()
-        rest = rest.join(F.broadcast(ok_ids), "point_id", "left_anti")
-
-    if n_pts is None:
-        n_pts = pts.count()
-    if n_resolved < n_pts or not pieces:
-        # the brute piece is unconditional when nothing else produced a
-        # frame (expansion_rings=() on an empty input would otherwise
-        # leave pieces empty and crash below) [ADVICE r3 #3]
-        brute = rest.crossJoin(F.broadcast(allt)).withColumn(
-            "dist2", _dist2(F.col("lon"), F.col("lat"), F.col("tx"), F.col("ty"))
-        )
-        pieces.append(_rank_topk(brute, k).select(*out_cols))
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p)
-    return out
